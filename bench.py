@@ -94,7 +94,7 @@ import re
 import time
 
 from mspr2_back_spark.plans import QUERIES
-from mspr2_back_spark.session import get_spark
+from mspr2_back_spark.session import CPUS, get_spark
 
 REPEATS = 5
 
@@ -509,7 +509,6 @@ def main() -> None:
     # superset of every field the line ever had. "cpus" is recorded
     # so the driver's low-core scaling sweep is attributable from the
     # artifact alone (the r18 suspect_cpus_ignored false positive).
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     compact = {
         "metric": "headline_queries_total_sec",
         "value": total,
@@ -517,7 +516,7 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "repeats": REPEATS,
-        "cpus": cpus,
+        "cpus": CPUS,
         "master": spark.sparkContext.master,
         "advisory_partition_bytes": spark.conf.get(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes"
@@ -547,7 +546,7 @@ def main() -> None:
         # the stat that survives co-tenant noise (r14 VERDICT task 2)
         "queries_min_warm": best_warm,
         "total_min_warm": round(sum(best_warm.values()), 4),
-        "full_artifact": f"/tmp/bench_full_c{cpus}.json",
+        "full_artifact": f"/tmp/bench_full_c{CPUS}.json",
     }
     full = dict(compact)
     full.update(

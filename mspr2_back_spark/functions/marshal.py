@@ -2,9 +2,10 @@
 
 The reference coerces query results row-by-row to JSON-safe values
 (ref app/routes/data.py:14-48): NaN→null, numpy scalars→native,
-Decimal→float, date/datetime→ISO-8601 strings. Here the conversion is
-one Arrow-batched pass over the collected result — the serving
-contract, not the engine, owns presentation types.
+Decimal→float, date/datetime→ISO-8601 strings. Here the same per-value
+conversion runs row by row over ``DataFrame.collect()`` (serving
+results are small) — the serving contract, not the engine, owns
+presentation types.
 """
 
 from __future__ import annotations

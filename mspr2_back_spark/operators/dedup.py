@@ -20,15 +20,14 @@ Scale notes (100 TB corpus):
   length per shingle — at scale you add prefix filtering / df-cap
   on hot shingles (documented on the function);
 - SimHash is a per-row expression (embarrassingly parallel) whose
-  fingerprints bucket near-dups for pair generation; the portable
+  fingerprints feed a Hamming-ball probe join against the
+  fingerprint-count table (no pair materialization); the portable
   16-bit width saturates on real corpora, so production runs use
   the 64-bit form (bits=64) — measured concentration collapse in
   SCALING.md.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -456,89 +455,6 @@ def simhash_buckets(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def simhash_near_pairs(
-    docs: DataFrame,
-    max_hamming: int = 2,
-    bands: int = 4,
-    bits: int = 16,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Near-match pair generation over SimHash fingerprints: all
-    pairs within ``max_hamming`` bit flips, found by pigeonhole
-    banding + exact Hamming verification.
-
-    The fingerprint's ``bits`` are split into ``bands`` equal bands;
-    if two fingerprints differ in ≤ max_hamming bits then at most
-    max_hamming bands are touched, so with bands > max_hamming the
-    pair MUST agree exactly on ≥ 1 band — single-band buckets are a
-    complete candidate generator (recall 1.0, unlike the similarity
-    LSH families). Candidates expand in-bucket (sorted list, never a
-    self-join), then exact ``bit_count(xor)`` keeps true pairs.
-
-    Scale note: bucket count per band is 2^(bits/bands) — at the
-    portable 16-bit fingerprint that is 16 per band, fine for test
-    corpora but quadratic-in-bucket at corpus scale; production runs
-    widen the fingerprint (64-bit, 4 bands of 16) so buckets stay
-    small. The plan shape (band shuffle + in-bucket expansion +
-    verify) is band-width-invariant.
-    """
-    if bands <= max_hamming:
-        raise ValueError(
-            f"bands ({bands}) must exceed max_hamming ({max_hamming}) "
-            "for the pigeonhole guarantee"
-        )
-    width = bits // bands
-    # Persisted: the candidate self-join reads the fingerprint
-    # relation twice (one int per doc — tiny either way).
-    fp = simhash_fingerprints(docs, id_col, bits=bits).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    fp.count()
-    banded = fp.select(
-        F.col(id_col).alias("doc"),
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright("simhash", b * width)
-                    .bitwiseAND(F.lit((1 << width) - 1))
-                    .alias(f"b{b}")
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band_idx", "band_val"),
-    )
-    # Candidate generation is a bucket-keyed SELF-JOIN here, unlike
-    # the minhash pipeline's in-place array expansion: minhash band
-    # buckets are hash-random and tiny, but narrow simhash bands
-    # concentrate (real fingerprints are highly non-uniform — a
-    # 3,786-doc bucket was measured at sf0.1), and collect_list would
-    # materialize a bucket's whole pair set as ONE in-row array
-    # (OOM), where the join streams the same pairs as rows. The
-    # Hamming filter runs BEFORE the pair dedup, so the exchange
-    # only carries true near-pairs (AQE splits skewed buckets).
-    a = banded.select(
-        "band_idx",
-        "band_val",
-        F.col("doc").alias("doc_id_1"),
-        F.col("simhash").alias("sh1"),
-    )
-    b = banded.select(
-        "band_idx",
-        "band_val",
-        F.col("doc").alias("doc_id_2"),
-        F.col("simhash").alias("sh2"),
-    )
-    ham = F.bit_count(F.col("sh1").bitwiseXOR(F.col("sh2")))
-    return (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("doc_id_1") < F.col("doc_id_2"))
-        .select("doc_id_1", "doc_id_2", ham.cast("int").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["doc_id_1", "doc_id_2"])
-    )
-
-
 def _signed64(m: int) -> int:
     """Two's-complement signed view of an unsigned 64-bit mask (bit 63
     set ⇒ negative BIGINT literal, matching Spark/Java semantics)."""
@@ -565,8 +481,6 @@ def simhash_near_degree(
     max_hamming: int = 2,
     bits: int = 16,
     id_col: str = "doc_id",
-    probe_mask_limit: int = 4096,
-    bands: int = 4,
 ) -> DataFrame:
     """Per-document near-duplicate degree under SimHash Hamming ≤
     ``max_hamming``, via a Hamming-ball PROBE JOIN — no pair
@@ -577,49 +491,14 @@ def simhash_near_degree(
     bits) and joins against the aggregated fingerprint-COUNT table —
     at most min(2^bits, N_distinct) rows, broadcast. Degree = Σ
     matched counts (self excluded); min_hamming = nearest non-empty
-    shell. This is how production simhash dedup scales: the probe
-    explode is scan-side and corpus-linear, the join side is
-    vocabulary-sized, and the concentrated-fingerprint case that
-    makes pair materialization quadratic (`simhash_near_pairs` built
-    4.9M pairs from 5k docs at sf0.1 on 16-bit prints) costs nothing
-    extra here. Exactly equal to aggregating the pair relation.
-
-    Above ``probe_mask_limit`` masks (e.g. 64-bit / Hamming ≤ 3 =
-    43,745) the probe explode itself becomes the bottleneck — a 43,745×
-    row amplification is worse than banding — so the operator switches
-    to the pigeonhole-banded pair generator (`simhash_near_pairs`,
-    complete for bands > max_hamming) and aggregates the symmetric
-    pair relation into the identical degree table. Both paths are
-    equivalence-tested against each other.
+    shell. The probe explode is scan-side and corpus-linear and the
+    join side is vocabulary-sized, so concentrated fingerprints (a
+    Hamming ≤ 2 pair relation of 4.9M pairs from 5k docs was measured
+    at sf0.1 on 16-bit prints) cost nothing extra. Exactly equal to
+    aggregating the pair relation. The explode amplifies rows by the
+    mask count, so wide balls (64-bit / Hamming ≤ 3 = 43,745 masks)
+    are costly; the registered queries use 137 and 2,081.
     """
-    n_masks = 1 + sum(
-        math.comb(bits, d) for d in range(1, max_hamming + 1)
-    )
-    if n_masks > probe_mask_limit:
-        pairs = simhash_near_pairs(
-            docs, max_hamming=max_hamming, bands=bands, bits=bits,
-            id_col=id_col,
-        )
-        # In-row symmetrization (r18, same rework as the LP edge
-        # build): a union would reference the banded pair DAG from
-        # both branches — one explode emits both endpoints per pair
-        # over a single subtree.
-        sym = pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("doc_id_1").alias("doc_id"), F.col("hamming")
-                    ),
-                    F.struct(
-                        F.col("doc_id_2").alias("doc_id"), F.col("hamming")
-                    ),
-                )
-            ).alias("e")
-        ).select("e.doc_id", "e.hamming")
-        return sym.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("n_near"),
-            F.min("hamming").cast("int").alias("min_hamming"),
-        )
     masks = hamming_ball_masks(bits, max_hamming)
     fp = simhash_fingerprints(docs, id_col, bits=bits)
     fpc = fp.groupBy("simhash").agg(F.count(F.lit(1)).alias("n"))
@@ -686,22 +565,15 @@ def near_dup_clusters(
     raises if not converged, rather than returning a silently
     under-merged clustering.
 
-    Deep-chain escape hatch (r10, VERDICT r9 hygiene note): the
-    default cap of 20 rounds covers any graph of diameter < 20 — on
-    real near-dup corpora clusters are stars and short chains, so
-    hitting the cap almost always means the pair generation is wrong
-    (threshold too low, banding misconfigured), which is why the
-    default stays low and loud. If a corpus legitimately carries
-    longer chains (e.g. drifting boilerplate where doc_i ~ doc_{i+1}
-    but doc_1 !~ doc_n), either raise ``max_iter`` to the expected
-    diameter — cost is one labels-sized shuffle per extra round, the
-    edges stay cached — or switch to the pytest-pinned
-    ``star_contraction_clusters`` hedge in this module, whose
-    large-star/small-star alternation converges in O(log n) rounds
-    regardless of diameter (it pays ~2x the joins per round, so it
-    only wins when the diameter is genuinely large;
-    ``tests/test_pipeline_ops.py`` exercises it on a chain deeper
-    than this default cap).
+    Deep chains: the default cap of 20 rounds covers any graph of
+    diameter < 20 — on real near-dup corpora clusters are stars and
+    short chains, so hitting the cap almost always means the pair
+    generation is wrong (threshold too low, banding misconfigured),
+    which is why the default stays low and loud. If a corpus
+    legitimately carries longer chains (e.g. drifting boilerplate
+    where doc_i ~ doc_{i+1} but doc_1 !~ doc_n), raise ``max_iter``
+    to the expected diameter — cost is one labels-sized shuffle per
+    extra round, the edges stay cached.
 
     Output: one row per distinct node — (node, cluster) with
     ``cluster = min(reachable ids)``.
@@ -838,114 +710,10 @@ def near_dup_clusters(
         raise RuntimeError(
             f"near_dup_clusters: no fixpoint after {max_iter} rounds "
             "(pathological chain graph? raise max_iter to the expected "
-            "diameter, or use star_contraction_clusters — O(log n) "
-            "rounds on any graph)"
+            "diameter)"
         )
     finally:
         edges.unpersist()
-
-
-def star_contraction_clusters(
-    pairs: DataFrame,
-    a_col: str = "doc_id_1",
-    b_col: str = "doc_id_2",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components by ALTERNATING large-star/small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC'14 — public algorithm), same output contract as
-    ``near_dup_clusters``: one row per distinct node, (node, cluster)
-    with cluster = min reachable id.
-
-    Per round: large-star hangs every neighbor v > u off
-    m(u) = min(N(u) ∪ {u}); small-star (on edges directed high→low)
-    re-hangs every smaller neighbor plus u itself off the minimum.
-    The edge list CONTRACTS toward one star per component and the
-    alternation converges in O(log n) rounds on any graph — the
-    hedge against label propagation's diameter-bound rounds, and on
-    dense clique-heavy graphs (the ≥27×-replication worst case in
-    SCALING.md) round 1 already collapses each clique to a star, so
-    later rounds run on ~|V| edges instead of |E|.
-
-    Trade-off vs label propagation (measured in SCALING.md round 9):
-    each round costs ~2× the shuffles (two star phases + the
-    edge-set convergence check), so on the SHALLOW sparse graphs
-    real near-dup corpora produce, LP's fewer-shuffles-per-round
-    wins; star contraction wins when cliques dominate. Every
-    iteration localCheckpoints (eager) to truncate lineage —
-    the standard iterative pattern, reliable checkpoints on a real
-    cluster."""
-    raw = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    nodes = (
-        raw.select(F.col("src").alias("node"))
-        .union(raw.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # canonical high→low directed form, self-loops dropped
-    edges = (
-        raw.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.greatest("src", "dst").alias("src"),
-            F.least("src", "dst").alias("dst"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        # -- large-star: for each u, m = min(N(u) ∪ {u}); emit
-        # (v, m) for every neighbor v > u --
-        und = edges.union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        m = (
-            und.groupBy("src")
-            .agg(F.min("dst").alias("mn"))
-            .select("src", F.least("mn", "src").alias("m"))
-        )
-        large = (
-            und.join(m, "src")
-            .filter(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        # -- small-star on high→low edges: for each u, m = min of
-        # its smaller neighbors; re-hang them all (and u) off m --
-        j = large.join(
-            large.groupBy("src").agg(F.min("dst").alias("m")), "src"
-        )
-        small = (
-            j.select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .union(j.select("src", F.col("m").alias("dst")))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # converged iff the canonical edge set is unchanged
-        converged = (
-            small.count() == edges.count()
-            and small.subtract(edges).count() == 0
-        )
-        edges = small
-        if converged:
-            break
-    else:
-        raise RuntimeError(
-            f"star_contraction_clusters: no fixpoint after {max_iter} rounds"
-        )
-    # final edges form one star per component (leaf → component min,
-    # by the connectivity-preservation invariant of both phases);
-    # minima and singleton nodes self-label via the LEFT join
-    return (
-        nodes.join(
-            edges.select(F.col("src").alias("node"), F.col("dst").alias("lbl")),
-            "node",
-            "left",
-        )
-        .groupBy("node")
-        .agg(F.min(F.coalesce(F.col("lbl"), F.col("node"))).alias("cluster"))
-    )
 
 
 def repeated_span_coverage(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:

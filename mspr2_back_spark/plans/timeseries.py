@@ -747,7 +747,8 @@ def funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     The quartiles ride operators/quantiles.binned_quantiles over the
     converted-users relation (3600-second bins — no global row sort,
     the same scale path as equidepth_price_bands); latency is
-    floor-of-epoch-seconds arithmetic on both engines. One row out.
+    floor-of-epoch-seconds arithmetic on both engines. One row out,
+    also when nobody converts.
     """
     from mspr2_back_spark.operators.quantiles import binned_quantiles
     from mspr2_back_spark.plans.workloads import (
@@ -816,23 +817,22 @@ def funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = binned_quantiles(
         converted, "cohort", "latency_sec", bin_width=3600.0
     )
-    extremes = converted.groupBy("cohort").agg(
+    # The one-row global aggregate drives the output, so a funnel that
+    # no user completes still returns its row (n_converted = 0, NULL
+    # quantiles and extremes), exactly like the oracle's FROM e, q.
+    summary = converted.agg(
+        F.count(F.lit(1)).alias("n_converted"),
         F.min("latency_sec").alias("min_sec"),
         F.max("latency_sec").alias("max_sec"),
+    ).withColumn("cohort", F.lit("all"))
+    quartiles = qs.select(
+        F.col("grp").alias("cohort"),
+        F.col("p25").cast("bigint").alias("p25_sec"),
+        F.col("p50").cast("bigint").alias("p50_sec"),
+        F.col("p75").cast("bigint").alias("p75_sec"),
     )
-    return (
-        qs.select(
-            F.col("n_orders").alias("n_converted"),
-            F.col("p25").cast("bigint").alias("p25_sec"),
-            F.col("p50").cast("bigint").alias("p50_sec"),
-            F.col("p75").cast("bigint").alias("p75_sec"),
-            F.col("grp").alias("cohort"),
-        )
-        .join(F.broadcast(extremes), "cohort")
-        .select(
-            "n_converted", "min_sec", "p25_sec", "p50_sec", "p75_sec",
-            "max_sec",
-        )
+    return summary.join(F.broadcast(quartiles), "cohort", "left").select(
+        "n_converted", "min_sec", "p25_sec", "p50_sec", "p75_sec", "max_sec"
     )
 
 

@@ -12,11 +12,27 @@ import re
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-# JVM byte-size literal: digits plus an optional b/k/m/g/t suffix
-# (optionally followed by 'b', e.g. "64m", "64mb", "1048576").
-_SIZE_RE = re.compile(r"^[0-9]+(?:[bkmgt]b?)?$", re.IGNORECASE)
+
+def _cpus_from_env() -> int:
+    """Local core count from SPARK_GRAFT_CPUS (default 32); anything
+    but a positive integer raises a ValueError naming the variable."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    if not raw.strip().isdecimal() or int(raw) < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be a positive integer; got {raw!r}"
+        )
+    return int(raw)
+
+
+# Read once at import: sizes both local[N] and the default
+# spark.sql.shuffle.partitions.
+CPUS = _cpus_from_env()
+
+# JVM byte-size literal: digits, optionally followed by a bare 'b' or
+# a k/m/g/t suffix with an optional 'b' (e.g. "64m", "64mb",
+# "1048576"); "64bb" is rejected.
+_SIZE_RE = re.compile(r"^[0-9]+(?:b|[kmgt]b?)?$", re.IGNORECASE)
 
 
 def _advisory_partition_bytes() -> str:
@@ -62,13 +78,11 @@ def get_spark(
       runtime stats anyway.
     - Arrow on: every toPandas()/applyInPandas crossing is batched.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{CPUS}]")
         .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            "spark.sql.shuffle.partitions", str(shuffle_partitions or CPUS)
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -1,11 +1,10 @@
-"""r19: the baseline JPEG entropy coder is vectorized
-(operators/jpeg._encode_baseline_scan — numpy symbol assembly, one
-global bit expansion, scatter-based stuffing/restart framing). This
-test pins it BIT-IDENTICAL to the scalar per-coefficient reference
-(the former write_block + _BitWriter loop, reimplemented here
-verbatim) across profiles, qualities, restart intervals and shapes —
+"""Pins the baseline JPEG entropy coder
+(operators/jpeg._encode_baseline_scan) BIT-IDENTICAL to an
+independent per-coefficient reference (write_block + a bit writer,
+reimplemented here) across profiles, restart intervals and shapes —
 including multi-ZRL runs, FF-stuffing inside and at the end of
-restart segments, and the 1×1 and non-8-multiple edge shapes."""
+restart segments, EOB-only blocks, and scans from 1 to 1,152
+blocks."""
 
 from __future__ import annotations
 
@@ -23,7 +22,6 @@ from mspr2_back_spark.operators.jpeg import (
     DC_LUMA_VALS,
     _canonical_codes,
     _encode_baseline_scan,
-    _encode_scan_vectorized,
 )
 
 
@@ -167,15 +165,7 @@ def test_vectorized_scan_coder_matches_scalar_reference(seed, ri, shape):
     ref = _ref_scan(
         flat, samp, comp_bw, mcu_x, mcu_y, dc_codes, ac_codes, ri
     )
-    # the production dispatcher (scalar below _VECTOR_SCAN_MIN_BLOCKS,
-    # vectorized above) …
     got = _encode_baseline_scan(
         flat, samp, comp_bw, mcu_x, mcu_y, dc_tables, ac_tables, ri
     )
     assert got == ref
-    # … AND the vectorized coder forced at EVERY size, so the small
-    # shapes (the dispatcher's scalar side) still pin its bit-identity
-    got_vec = _encode_scan_vectorized(
-        flat, samp, comp_bw, mcu_x, mcu_y, dc_tables, ac_tables, ri
-    )
-    assert got_vec == ref

@@ -246,20 +246,14 @@ def test_near_dup_clusters_chain_converges(spark):
     assert got == {i: 0 for i in range(12)}
 
 
-def test_star_contraction_matches_label_propagation(spark):
-    """r9 (VERDICT r8 task 4): the alternating large-star/small-star
-    CC must produce IDENTICAL (node, cluster) assignments to label
-    propagation across every graph shape the A/B exercised — chains
-    (diameter-bound for LP), cliques (the ≥27×-replication
-    densest-case star contraction targets), random graphs, and
-    descending-id chains (exercises the canonical high→low
-    orientation)."""
+def test_label_propagation_matches_union_find(spark):
+    """Label propagation must produce the (node, min reachable id)
+    assignment a pure-Python union-find computes, across chains
+    (diameter-bound for LP), descending-id chains, cliques, random
+    graphs and a mixed star+chain graph."""
     import random
 
-    from mspr2_back_spark.operators.dedup import (
-        near_dup_clusters,
-        star_contraction_clusters,
-    )
+    from mspr2_back_spark.operators.dedup import near_dup_clusters
 
     rng = random.Random(42)
     rand = [
@@ -280,17 +274,32 @@ def test_star_contraction_matches_label_propagation(spark):
         + [(100 + i, 101 + i) for i in range(10)]
         + [(19, 100)],
     }
+
+    def union_find(edges):
+        parent: dict[int, int] = {}
+
+        def find(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                # the smaller root wins, so every root is its
+                # component's minimum id
+                parent[max(ra, rb)] = min(ra, rb)
+        return {x: find(x) for x in parent}
+
     for name, edges in graphs.items():
         pairs = spark.createDataFrame(edges, "doc_id_1 long, doc_id_2 long")
         lp = {
             r.node: r.cluster
             for r in near_dup_clusters(pairs, max_iter=60).collect()
         }
-        st = {
-            r.node: r.cluster
-            for r in star_contraction_clusters(pairs).collect()
-        }
-        assert st == lp, name
+        assert lp == union_find(edges), name
 
 
 def test_pii_detect_and_redact_literals(spark):
@@ -540,6 +549,8 @@ def test_whole_surface_plan_hygiene(spark, sf_dir):
         "set_ops_nations": 3,           # (b) set ops over the 25-row nation dim
         "bm25_topk": 1,                 # (a) corpus-stats row (N/avgdl/df)
         "event_funnel": 1,              # (a) final funnel-count row
+        "funnel_latency": 1,            # (a) one-row count/min/max row
+                                        # that drives the output
         "embedding_quantize_stats": 1,  # (a) per-dim min/max stats row
         "fk_integrity_audit": 6,        # (a) one scalar row per FK edge
         "ann_quantized_topk": 2,        # (a) min/max stats row x2 branches
@@ -930,56 +941,6 @@ def test_cell_cosine_pairs_multi_probe_recall(spark, sf_dir):
         assert pair in exact and abs(sim - exact[pair]) < 1e-9, pair
 
 
-def test_simhash_near_pairs_complete(spark, sf_dir):
-    """Pigeonhole banding is a COMPLETE candidate generator for
-    hamming <= 2 (bands > max_hamming forces an exact band match):
-    the banded result must equal brute force over the fingerprints,
-    and bands <= max_hamming must be rejected."""
-    import itertools
-
-    import pytest as _pytest
-
-    docs = load_table(spark, sf_dir, "documents")
-    fp = {r.doc_id: r.simhash for r in dedup.simhash_fingerprints(docs).collect()}
-    brute = {
-        (a, b): bin(fp[a] ^ fp[b]).count("1")
-        for a, b in itertools.combinations(sorted(fp), 2)
-        if bin(fp[a] ^ fp[b]).count("1") <= 2
-    }
-    banded = {
-        (r.doc_id_1, r.doc_id_2): r.hamming
-        for r in dedup.simhash_near_pairs(docs).collect()
-    }
-    assert banded == brute and len(brute) > 0
-    with _pytest.raises(ValueError):
-        dedup.simhash_near_pairs(docs, max_hamming=4, bands=4)
-
-
-def test_simhash_degree_matches_pair_aggregation(spark, sf_dir):
-    """The Hamming-ball probe join must equal degree aggregation over
-    the (complete) banded pair set — two independent formulations of
-    the same quantity."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.simhash_near_pairs(docs)
-    sym = pairs.select(
-        F.col("doc_id_1").alias("doc_id"), "hamming"
-    ).unionAll(pairs.select(F.col("doc_id_2").alias("doc_id"), "hamming"))
-    from_pairs = {
-        (r.doc_id): (r.n_near, r.min_hamming)
-        for r in sym.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_near"),
-            F.min("hamming").cast("int").alias("min_hamming"),
-        )
-        .collect()
-    }
-    from_probe = {
-        r.doc_id: (r.n_near, r.min_hamming)
-        for r in dedup.simhash_near_degree(docs).collect()
-    }
-    assert from_probe == from_pairs and len(from_probe) > 0
-
-
 def test_ivf_topk_recall_floor(spark, sf_dir):
     """Pin the probe/recall contract of the adaptive (MLlib-KMeans)
     IVF variant: with n_probe=3 of 8 cells, top-10 recall vs exact
@@ -1050,47 +1011,33 @@ def test_simhash64_fingerprint_python_parity(spark, sf_dir):
         assert got[row.doc_id] == fp, row.doc_id
 
 
-def test_simhash64_degree_matches_brute(spark, sf_dir):
-    """64-bit probe-join degree == brute-force N^2 over the collected
-    fingerprints (negative/sign-bit fingerprints included)."""
+@pytest.mark.parametrize("bits, max_hamming", [(16, 2), (16, 3), (64, 2)])
+def test_simhash64_degree_matches_brute(spark, sf_dir, bits, max_hamming):
+    """Probe-join degree == brute-force N^2 over the collected
+    fingerprints, at both widths (64-bit negative/sign-bit
+    fingerprints included) and at Hamming <= 3 (697 masks at 16
+    bits)."""
     import itertools
 
     docs = load_table(spark, sf_dir, "documents")
     fp = {
-        r.doc_id: r.simhash & ((1 << 64) - 1)
-        for r in dedup.simhash_fingerprints(docs, bits=64).collect()
+        r.doc_id: r.simhash & ((1 << bits) - 1)
+        for r in dedup.simhash_fingerprints(docs, bits=bits).collect()
     }
     brute: dict[int, list[int]] = {}
     for a, b in itertools.combinations(sorted(fp), 2):
         h = bin(fp[a] ^ fp[b]).count("1")
-        if h <= 2:
+        if h <= max_hamming:
             brute.setdefault(a, []).append(h)
             brute.setdefault(b, []).append(h)
     expect = {d: (len(hs), min(hs)) for d, hs in brute.items()}
     got = {
         r.doc_id: (r.n_near, r.min_hamming)
-        for r in dedup.simhash_near_degree(docs, max_hamming=2, bits=64).collect()
-    }
-    assert got == expect and len(got) > 0
-
-
-def test_simhash_degree_hamming3_banded_fallback(spark, sf_dir):
-    """max_hamming=3 works on both degree paths and they agree: the
-    probe join (697 masks at 16 bits, under the default limit) and
-    the pigeonhole-banded pair aggregation (forced via
-    probe_mask_limit=0). bands=4 > 3 keeps the banding complete."""
-    docs = load_table(spark, sf_dir, "documents")
-    via_probe = {
-        r.doc_id: (r.n_near, r.min_hamming)
-        for r in dedup.simhash_near_degree(docs, max_hamming=3).collect()
-    }
-    via_bands = {
-        r.doc_id: (r.n_near, r.min_hamming)
         for r in dedup.simhash_near_degree(
-            docs, max_hamming=3, probe_mask_limit=0, bands=4
+            docs, max_hamming=max_hamming, bits=bits
         ).collect()
     }
-    assert via_probe == via_bands and len(via_probe) > 0
+    assert got == expect and len(got) > 0
 
 
 def test_registry_report_matches_documented_counts():
@@ -1986,6 +1933,25 @@ class TestJpegCodec:
         buf[sof + 1] = 0xC9
         with pytest.raises(ValueError, match="non-baseline"):
             decode_jpeg(bytes(buf))
+
+    def test_edge_pad_rejects_cropping_target(self):
+        """Edge padding grows a plane or returns it unchanged; a
+        target smaller than the plane on either axis raises instead
+        of silently cropping."""
+        import numpy as np
+        import pytest
+
+        from mspr2_back_spark.operators.jpeg import _edge_pad
+
+        plane = np.arange(12.0).reshape(3, 4)
+        assert _edge_pad(plane, 3, 4) is plane
+        padded = _edge_pad(plane, 8, 8)
+        assert padded.shape == (8, 8)
+        assert np.array_equal(padded[:3, :4], plane)
+        assert np.array_equal(padded[7, :4], plane[2])
+        for th, tw in ((2, 4), (3, 3), (2, 8)):
+            with pytest.raises(ValueError, match="smaller than"):
+                _edge_pad(plane, th, tw)
 
     def test_dispatch_routes_jpeg(self):
         """decode_image_batch must route a real JPEG to the real
@@ -3750,18 +3716,13 @@ def test_g711_encode_wav_roundtrip():
 
 
 def test_near_dup_clusters_deep_chain_hedge(spark):
-    """r10 (VERDICT r9 hygiene note): on a chain DEEPER than label
-    propagation's default 20-round cap, ``near_dup_clusters`` must
-    fail loudly at the cap (never return an under-merged clustering),
-    and the documented escape hatches must both work: raising
-    ``max_iter`` to the diameter, or switching to the O(log n)-round
-    ``star_contraction_clusters`` hedge at its DEFAULT cap."""
+    """On a chain DEEPER than label propagation's default 20-round
+    cap, ``near_dup_clusters`` must fail loudly at the cap (never
+    return an under-merged clustering), and the documented escape
+    hatch must work: raising ``max_iter`` to the diameter."""
     import pytest
 
-    from mspr2_back_spark.operators.dedup import (
-        near_dup_clusters,
-        star_contraction_clusters,
-    )
+    from mspr2_back_spark.operators.dedup import near_dup_clusters
 
     # a single 26-hop chain: diameter 25 > the default 20-round cap
     edges = [(i, i + 1) for i in range(25)]
@@ -3774,11 +3735,6 @@ def test_near_dup_clusters_deep_chain_hedge(spark):
         for r in near_dup_clusters(pairs, max_iter=30).collect()
     }
     assert lifted == expected
-    hedged = {
-        r.node: r.cluster
-        for r in star_contraction_clusters(pairs).collect()
-    }
-    assert hedged == expected
 
 
 def test_minhash_verify_joins_reuse_cached_doc_partitioning(spark, sf_dir):

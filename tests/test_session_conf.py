@@ -11,13 +11,16 @@ The AQE advisory partition size is scale-dependent and parameterised
 2. The env value is validated at the seam (r18 ADVICE): a malformed
    size raises a ValueError naming the env var instead of an opaque
    JVM NumberFormatException at session creation.
+
+SPARK_GRAFT_CPUS is validated the same way: anything but a positive
+integer raises a ValueError naming the variable.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from mspr2_back_spark.session import _advisory_partition_bytes
+from mspr2_back_spark.session import _advisory_partition_bytes, _cpus_from_env
 
 
 def test_advisory_default_is_scale_safe(monkeypatch):
@@ -33,8 +36,17 @@ def test_advisory_accepts_jvm_size_literals(monkeypatch, val):
     assert _advisory_partition_bytes() == val.strip()
 
 
-@pytest.mark.parametrize("val", ["1 m", "1mib", "m", "-1m", "1.5m", ""])
+@pytest.mark.parametrize(
+    "val", ["1 m", "1mib", "m", "-1m", "1.5m", "", "64bb"]
+)
 def test_advisory_rejects_malformed_sizes(monkeypatch, val):
     monkeypatch.setenv("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", val)
     with pytest.raises(ValueError, match="SPARK_GRAFT_ADVISORY_PARTITION_BYTES"):
         _advisory_partition_bytes()
+
+
+@pytest.mark.parametrize("val", ["0", "-2", "four", "1.5", "", " "])
+def test_cpus_rejects_non_positive_integers(monkeypatch, val):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", val)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        _cpus_from_env()

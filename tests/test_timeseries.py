@@ -294,7 +294,16 @@ def test_association_rules_match_python_recount(spark, sf_dir):
         )
 
 
-def test_funnel_latency_consistent_with_funnel(spark, sf_dir):
+def test_funnel_latency_consistent_with_funnel(spark, sf_dir, tmp_path):
+    """Latency profile agrees with the funnel counts; and a funnel
+    nobody completes still yields the oracle's single row
+    (n_converted = 0, NULL quantiles and extremes)."""
+    import datetime
+    import os
+
+    import duckdb
+
+    from mspr2_back_spark.plans import ORACLE_SQL
     from mspr2_back_spark.plans.timeseries import funnel_latency
     from mspr2_back_spark.plans.workloads import (
         FUNNEL_STAGES,
@@ -316,6 +325,32 @@ def test_funnel_latency_consistent_with_funnel(spark, sf_dir):
     )
     # window bound: purchase lands within signup-day + N calendar days
     assert lat.max_sec <= (FUNNEL_WINDOW_DAYS + 1) * 86400
+
+    # no conversions: one user stalls at click, one never signs up
+    t0 = datetime.datetime(2024, 5, 1, 8, 0, 0)
+    h = datetime.timedelta(hours=1)
+    rows = [
+        (1, t0, 3, "signup", 0.0, None),
+        (2, t0 + h, 3, "view", 0.0, None),
+        (3, t0 + 2 * h, 3, "click", 0.0, None),
+        (4, t0, 5, "purchase", 4.0, None),
+    ]
+    sf = str(tmp_path / "funnel_no_conversion")
+    os.makedirs(sf)
+    spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long,"
+        " event_type string, value double, props string",
+    ).coalesce(1).write.parquet(os.path.join(sf, "events.parquet"))
+    got = [tuple(r) for r in funnel_latency(spark, sf).collect()]
+    con = duckdb.connect()
+    con.sql(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"'{os.path.join(sf, 'events.parquet')}/*.parquet'"
+    )
+    want = con.execute(ORACLE_SQL["funnel_latency"]).fetchall()
+    con.close()
+    assert got == want == [(0, None, None, None, None, None)]
 
 
 def test_rfm_scores_partition_customers_into_quintiles(spark, sf_dir):
